@@ -1,8 +1,10 @@
 package graft.metric
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftShims, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.util.collection.OpenHashSet
 
 import graft.storage._
 
@@ -113,80 +115,100 @@ final class MetricEngine(spark: SparkSession, root: String,
       .withColumn("metric_id", xxhash64(col("name")))
       .withColumn("tsid", xxhash64(col("series_key")))
 
-  /** Ingest one batch of samples: populate ids, upsert the four meta tables,
-    * write data per segment (writes may not cross a segment —
-    * reference storage.rs:307-316). */
-  /** Register any series in `ided` (id-populated rows with name/metric_id/
-    * tsid/series_key/labels columns) that the series table doesn't know
-    * yet — steady-state batches carry no new series, so the four
-    * meta-table writes are skipped entirely (the reference's
-    * populate-then-persist wiring, metric/mod.rs:30-40, with an existence
-    * check in front). Shared by the samples and native-histogram write
-    * paths. */
-  private def registerSeriesMeta(ided: DataFrame): Unit = {
-    val known = series.scan(ScanRequest(projection = Some(Seq("tsid"))))
+  /** Tsids whose meta rows are committed, about 16 B each: loaded by one
+    * `series` scan on first use, grown only after `series.write` commits,
+    * never shrunk (nothing deletes series rows). It can only under-report:
+    * a series another process registered is written again, idempotently;
+    * a false hit is impossible. Reads and adds hold its monitor. */
+  private lazy val registered = {
+    val set = new OpenHashSet[Long]()
+    series.scan(ScanRequest(projection = Some(Seq("tsid")))).collect()
+      .foreach(r => set.add(r.getLong(0)))
+    registeredCount = set.size
+    set
+  }
+  @volatile private var registeredCount = 0
+
+  /** Size of the registered-series set (0 until the first write loads it);
+    * no Spark job. */
+  def registeredSeries: Int = registeredCount
+
+  /** Write the meta rows (reference metric/mod.rs:30-40, index/mod.rs:
+    * 28-37) of the batch's series missing from [[registered]]. `series`
+    * goes LAST and the set grows only after it commits, so a failure part
+    * way leaves the series unregistered and the next write (or process)
+    * writes all four tables again. `fresh` semi-joins a driver-side tsid
+    * snapshot, so a lost cache block recomputes the same rows. */
+  private def registerSeries(ided: DataFrame, tsids: Array[Long]): Unit = {
+    val newTsids =
+      registered.synchronized(tsids.distinct.filterNot(registered.contains))
+    if (newTsids.isEmpty) return
+    import spark.implicits._
     val fresh = ided
-      .select(col("name"), col("metric_id"), col("tsid"), col("series_key"),
-        col("labels"))
-      .dropDuplicates("tsid")
-      .join(known, Seq("tsid"), "left_anti") // AQE picks build side: batch vs catalog
-      .cache()
+      .join(broadcast(newTsids.toSeq.toDF("tsid")), Seq("tsid"), "left_semi")
+      .dropDuplicates("tsid").cache()
     try {
-      if (!fresh.isEmpty) {
-        // ORDER MATTERS: `fresh` is an anti-join against the series table,
-        // and cache() is only an optimization — a lost cache block
-        // recomputes the plan. Writing `series` FIRST would make a
-        // recompute (during the tags/index writes) see the batch's tsids
-        // as already-known and silently produce an EMPTY fresh set,
-        // permanently dropping those series' tag/index rows. Writing
-        // `series` LAST keeps every possible recompute consistent: until
-        // it commits, the anti-join re-derives the same fresh set.
-        metrics.write(
-          fresh.select(col("name").as("metric_name"), col("metric_id")).distinct()
-            .withColumn("field_id", lit(0))
-            .select("metric_name", "metric_id", "field_id"),
-          MetaRange)
-        val exploded = fresh.select(col("metric_id"), col("tsid"),
-          explode(col("labels")).as(Seq("tag_key", "tag_value")))
-        tags.write(
-          exploded.select("metric_id", "tag_key", "tag_value").distinct(), MetaRange)
-        index.write(
-          exploded.select("metric_id", "tag_key", "tag_value", "tsid").distinct(),
-          MetaRange)
-        series.write(
-          fresh.select(col("metric_id"), col("tsid"),
-            col("series_key").cast(BinaryType).as("series_key")).distinct(),
-          MetaRange)
-        // new metrics / label keys may exist now — drop the driver-side
-        // dictionary caches so the next lookup reloads
-        metricDictCache = null
-        tagKeysCache.clear()
-      }
+      metrics.write(fresh.select(col("name").as("metric_name"), col("metric_id"),
+        lit(0).as("field_id")).distinct(), MetaRange)
+      val exploded = fresh.select(col("metric_id"), col("tsid"),
+        explode(col("labels")).as(Seq("tag_key", "tag_value")))
+      tags.write(
+        exploded.select("metric_id", "tag_key", "tag_value").distinct(), MetaRange)
+      index.write(
+        exploded.select("metric_id", "tag_key", "tag_value", "tsid").distinct(),
+        MetaRange)
+      series.write(
+        fresh.select(col("metric_id"), col("tsid"),
+          col("series_key").cast(BinaryType).as("series_key")).distinct(),
+        MetaRange)
     } finally fresh.unpersist()
+    registered.synchronized {
+      newTsids.foreach(registered.add)
+      registeredCount = registered.size
+    }
+    // new metrics / label keys may exist now — drop the driver-side
+    // dictionary caches so the next lookup reloads
+    metricDictCache = null
+    tagKeysCache.clear()
   }
 
-  def write(samples: DataFrame): Unit = {
-    val ided = withIds(samples).cache()
+  /** One batch into one time-partitioned table, for every writer: populate
+    * ids, then ONE driver-side key pass collects the (tsid, segment) pairs
+    * that say which series are new (registered first when `register`) and
+    * which segments get an SST. An in-memory batch (a `LocalRelation`:
+    * HTTP, OTLP, rules) has its ids evaluated once, while planning, and a
+    * key pass with no job; a distributed one is cached for the key pass and
+    * the writes. A batch of known series runs one job per touched segment. */
+  private def ingest(batch: DataFrame, register: Boolean, columns: Seq[Column])(
+      writeSegment: (DataFrame, TimeRange) => Unit): Unit = {
+    val ided = withIds(batch)
+    val local = Some(ided.queryExecution.optimizedPlan)
+      .collect { case l: LocalRelation => GraftShims.ofRows(spark, l) }
+    val staged = local.getOrElse(ided.cache())
     try {
-      registerSeriesMeta(ided)
-      val dataRows = ided.select(col("metric_id"), col("tsid"),
-        col("timestamp").as("ts"), col("value"))
-        .withColumn("__seg__", floor(col("ts") / lit(segmentMs)).cast("long"))
-      // One sorted SST per segment touched by the batch (bounded by the
-      // batch's time span, typically 1).
-      val segs = dataRows.select("__seg__").distinct().collect().map(_.getLong(0))
-      segs.foreach { g =>
-        val batch = dataRows.filter(col("__seg__") === g).drop("__seg__")
-        val range = TimeRange(g * segmentMs, (g + 1) * segmentMs)
-        // dataBuckets > 1 is the cluster shape: N pk-hash-partitioned SSTs
-        // written in parallel per segment (a coalesce(1) single-file write
-        // serializes a large ingest batch through one task); 1 keeps the
-        // reference-faithful one-SST-per-write small path.
-        if (dataBuckets > 1) data.writeBucketed(batch, range, dataBuckets)
-        else data.write(batch, range)
+      val seg = TimeMergeStorage.segmentIdColumn(col("timestamp"), segmentMs)
+      val keyCols = staged.select(col("tsid"), seg)
+      val keys = (if (local.isDefined) keyCols else keyCols.distinct()).collect()
+      if (register && keys.nonEmpty) registerSeries(staged, keys.map(_.getLong(0)))
+      keys.map(_.getLong(1)).distinct.sorted.foreach { g =>
+        writeSegment(staged.filter(seg === g).select(columns: _*),
+          TimeRange(g * segmentMs, (g + 1) * segmentMs))
       }
-    } finally ided.unpersist()
+    } finally if (local.isEmpty) staged.unpersist()
   }
+
+  /** Ingest one batch of samples: populate ids, register new series in the
+    * four meta tables, write one data SST per touched segment (writes may
+    * not cross a segment — reference storage.rs:307-316). */
+  def write(samples: DataFrame): Unit =
+    ingest(samples, register = true, Seq(col("metric_id"), col("tsid"),
+        col("timestamp").as("ts"), col("value"))) { (batch, range) =>
+      // dataBuckets > 1 is the cluster shape: N pk-hash-partitioned SSTs
+      // written in parallel per segment; 1 keeps the reference-faithful
+      // one-SST-per-write small path.
+      if (dataBuckets > 1) data.writeBucketed(batch, range, dataBuckets)
+      else data.write(batch, range)
+    }
 
   /** Ingest a batch of exemplars. Input columns: `name` (metric),
     * `labels` (series labels map), `ex_labels` (the exemplar's own
@@ -197,24 +219,11 @@ final class MetricEngine(spark: SparkSession, root: String,
     * request (an exemplar for a never-written series is still stored and
     * becomes reachable once its series registers). One sorted SST per
     * touched segment, like the data table. */
-  def writeExemplars(ex: DataFrame): Unit = {
-    // cache like write()'s `ided`: the plan is otherwise re-executed once
-    // for the segment-discovery collect and once more per touched segment
-    val rows = withIds(ex)
-      .select(col("metric_id"), col("tsid"),
-        col("timestamp").as("ts"),
-        MetricEngine.labelsKeyColumn(col("ex_labels")).as("exemplar_key"),
-        col("value"), col("ex_labels").as("labels"))
-      .withColumn("__seg__", floor(col("ts") / lit(segmentMs)).cast("long"))
-      .cache()
-    try {
-      val segs = rows.select("__seg__").distinct().collect().map(_.getLong(0))
-      segs.foreach { g =>
-        exemplars.write(rows.filter(col("__seg__") === g).drop("__seg__"),
-          TimeRange(g * segmentMs, (g + 1) * segmentMs))
-      }
-    } finally rows.unpersist()
-  }
+  def writeExemplars(ex: DataFrame): Unit =
+    ingest(ex, register = false, Seq(col("metric_id"), col("tsid"),
+      col("timestamp").as("ts"),
+      MetricEngine.labelsKeyColumn(col("ex_labels")).as("exemplar_key"),
+      col("value"), col("ex_labels").as("labels")))(exemplars.write(_, _))
 
   /** Ingest a batch of native histogram samples (remote-write
     * [[graft.streaming.RemoteWrite.HistogramSample]] shape, flattened).
@@ -228,23 +237,12 @@ final class MetricEngine(spark: SparkSession, root: String,
     * series — Prometheus 3.x scrapes can be histogram-only). Identity is
     * (metric_id, tsid, ts): re-delivered batches upsert idempotently
     * under Overwrite merge, same as the data table. */
-  def writeHistograms(h: DataFrame): Unit = {
-    val ided = withIds(h).cache()
-    try {
-      registerSeriesMeta(ided)
-      val rows = ided.select(col("metric_id"), col("tsid"),
-        col("timestamp").as("ts"), col("count"), col("sum"),
-        col("bucket_schema"), col("zero_threshold"), col("zero_count"),
-        col("pos_idx"), col("pos_cnt"), col("neg_idx"), col("neg_cnt"),
-        col("custom_values"))
-        .withColumn("__seg__", floor(col("ts") / lit(segmentMs)).cast("long"))
-      val segs = rows.select("__seg__").distinct().collect().map(_.getLong(0))
-      segs.foreach { g =>
-        histograms.write(rows.filter(col("__seg__") === g).drop("__seg__"),
-          TimeRange(g * segmentMs, (g + 1) * segmentMs))
-      }
-    } finally ided.unpersist()
-  }
+  def writeHistograms(h: DataFrame): Unit =
+    ingest(h, register = true, Seq(col("metric_id"), col("tsid"),
+      col("timestamp").as("ts"), col("count"), col("sum"),
+      col("bucket_schema"), col("zero_threshold"), col("zero_count"),
+      col("pos_idx"), col("pos_cnt"), col("neg_idx"), col("neg_cnt"),
+      col("custom_values")))(histograms.write(_, _))
 
   /** Native histogram rows of the series matching a PromQL selector within
     * `range` — the raw read behind [[histogramQuantile]] and the serving
@@ -632,11 +630,11 @@ final class MetricEngine(spark: SparkSession, root: String,
     * overhead on a dictionary that only changes when a NEW metric
     * registers. null = not loaded; None = dictionary larger than the
     * driver budget (fall back to per-name pruned lookups); Some(map) =
-    * the full name→id dictionary. Invalidated by [[registerSeriesMeta]]
+    * the full name→id dictionary. Invalidated by [[registerSeries]]
     * (the only metrics-table writer), so a lookup after ingest reloads.
     *
     * Single-writer-per-root assumption (documented, round 16): these
-    * caches see only THIS instance's registerSeriesMeta. Metrics or tag
+    * caches see only THIS instance's registerSeries. Metrics or tag
     * keys written to the same storage root by another MetricEngine
     * instance or process are invisible to name resolution until this
     * instance restarts — multi-writer deployments must route ingest
@@ -1469,7 +1467,7 @@ final class MetricEngine(spark: SparkSession, root: String,
   /** Per-metric tag-KEY dictionary cache (round 15): the serving
     * decoration of every exact-name result re-discovered the metric's
     * label keys with its own scan+collect job; the key set only changes
-    * when a new series registers ([[registerSeriesMeta]] invalidates).
+    * when a new series registers ([[registerSeries]] invalidates).
     * Bounded by the number of queried metrics × their key counts. */
   private val tagKeysCache =
     new java.util.concurrent.ConcurrentHashMap[Long, Seq[String]]()

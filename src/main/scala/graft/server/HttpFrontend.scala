@@ -1099,9 +1099,9 @@ final class HttpFrontend(
   /** `GET /metrics` — the server's OWN telemetry in the text exposition
     * format (version 0.0.4), so a graft deployment is scraped and
     * monitored like any Prometheus component: per-handler request
-    * counters, ingest gate state, rule-evaluation counters, process
-    * uptime/start time, and JVM heap gauges. All driver-side counter
-    * reads — no Spark job. */
+    * counters, ingest gate state, registered series, rule-evaluation
+    * counters, process uptime/start time, and JVM heap gauges. All
+    * driver-side counter reads — no Spark job. */
   countedContext("/metrics", (ex: HttpExchange) => {
     val sb = new StringBuilder
     def line(s: String): Unit = { sb.append(s).append('\n'); () }
@@ -1116,6 +1116,9 @@ final class HttpFrontend(
     line("# HELP graft_ingest_enabled Whether the write gate is open.")
     line("# TYPE graft_ingest_enabled gauge")
     line(s"graft_ingest_enabled ${if (keepWriting.get()) 1 else 0}")
+    line("# HELP graft_series_registered Series known registered (loaded by the first write).")
+    line("# TYPE graft_series_registered gauge")
+    line(s"graft_series_registered ${engine.registeredSeries}")
     ruleEngine.foreach { re =>
       line("# HELP graft_rule_evaluations_total Rule evaluations run.")
       line("# TYPE graft_rule_evaluations_total counter")

@@ -69,8 +69,9 @@ object MetricStreamIngest {
   /** Start the ingest query: payload stream → engine tables (scalar
     * samples AND native histograms — remote-write 2.0 interleaves both in
     * one payload). The micro-batch persists across the two writes so the
-    * snappy+protobuf decode runs once per payload per trigger (the old
-    * isEmpty-then-write shape re-ran the decode plan for the check). */
+    * snappy+protobuf decode runs once per payload per trigger. An empty
+    * side needs no pre-check: its key pass finds no segments, so it
+    * writes nothing. */
   def start(engine: MetricEngine, payloads: Dataset[Array[Byte]],
       checkpointDir: String, triggerMs: Long = 500L): StreamingQuery =
     decodeFull(payloads).writeStream
@@ -80,10 +81,8 @@ object MetricStreamIngest {
         val b = batch.persist()
         try {
           import b.sparkSession.implicits._
-          val s = b.flatMap(_.samples)
-          if (!s.isEmpty) engine.write(s.toDF())
-          val h = b.flatMap(_.hists)
-          if (!h.isEmpty) engine.writeHistograms(h.toDF())
+          engine.write(b.flatMap(_.samples).toDF())
+          engine.writeHistograms(b.flatMap(_.hists).toDF())
         } finally b.unpersist()
       }
       .start()

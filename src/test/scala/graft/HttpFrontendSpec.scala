@@ -45,6 +45,31 @@ class HttpFrontendSpec extends AnyFunSuite {
       Map("host" -> s"h${i % 3}", "mode" -> "user"),
       t0 + (offset + i) * 1000L, (offset + i) * 1.5))
 
+  test("/metrics graft_series_registered rises with a new series and " +
+      "stays flat on a repeat") {
+    val engine = new MetricEngine(spark,
+      Files.createTempDirectory("graft-http-reg").toString)
+    val fe = new HttpFrontend(spark, engine)
+    val port = fe.start()
+    try {
+      def registered(): Long = {
+        val body = get(port, "/metrics").body()
+        "(?m)^graft_series_registered (\\d+)$".r.findFirstMatchIn(body)
+          .map(_.group(1).toLong).getOrElse(fail(body))
+      }
+      assert(registered() == 0)
+      val body = RemoteWrite.encode(samples(6, 0)) // 3 series (host h0..h2)
+      assert(post(port, "/api/v1/write", body).statusCode() == 204)
+      assert(registered() == 3)
+      assert(post(port, "/api/v1/write", body).statusCode() == 204)
+      assert(registered() == 3)
+      val more = RemoteWrite.encode(Seq(Sample("cpu_seconds_total",
+        Map("host" -> "h9", "mode" -> "user"), t0 + 9000L, 1.0)))
+      assert(post(port, "/api/v1/write", more).statusCode() == 204)
+      assert(registered() == 4)
+    } finally fe.stop()
+  }
+
   test("HTTP frontend: liveness, remote-write ingest, toggle gate, query, " +
       "async compact (server/src/main.rs:58-80 surface)") {
     val engine = new MetricEngine(spark,

@@ -676,4 +676,107 @@ class MetricEngineSpec extends AnyFunSuite {
         s"buckets leaked outside the requested range: $buckets")
     } finally spark.conf.unset("graft.promql.rangeWindows")
   }
+
+  // --- write path: registered-series set + one key pass ----------------
+
+  /** Spark jobs `body` launches, through a job group (the status tracker
+    * is listener-fed, so it gets a beat to catch up). */
+  private def jobsOf(body: => Unit): Int = {
+    val group = s"metric-write-${java.util.UUID.randomUUID()}"
+    spark.sparkContext.setJobGroup(group, "metric write job count")
+    try body finally spark.sparkContext.clearJobGroup()
+    Thread.sleep(300)
+    spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
+  }
+
+  /** SST ids of the four meta tables — any meta write adds one. */
+  private def metaSsts(e: MetricEngine): Seq[Set[Long]] =
+    Seq(e.metrics, e.tags, e.index, e.series)
+      .map(_.manifest.allSsts().map(_.id).toSet)
+
+  private def upBatch(ts: Long, jobs: String*) = {
+    import spark.implicits._
+    jobs.map(j => Sample("up", Map("job" -> j), ts, 1.0)).toDF()
+  }
+
+  test("a batch of registered series runs exactly one Spark job (the SST " +
+      "write) and leaves the meta tables unchanged") {
+    val e = engine()
+    e.write(upBatch(day, "a", "b"))
+    val meta = metaSsts(e)
+    val batch = upBatch(day + 1000, "a", "b")
+    assert(jobsOf(e.write(batch)) == 1)
+    assert(metaSsts(e) == meta)
+    assert(e.data.manifest.allSsts().size == 2)
+    assert(e.data.scan().count() == 4)
+    assert(e.registeredSeries == 2)
+  }
+
+  test("a batch with one new series registers it; an identical repeat " +
+      "adds no meta SST") {
+    val e = engine()
+    e.write(upBatch(day, "a"))
+    assert(e.seriesFor("up").map(_("job")) == Seq("a"))
+    e.write(upBatch(day + 1000, "a", "b"))
+    assert(e.seriesFor("up").map(_("job")).sorted == Seq("a", "b"))
+    assert(e.seriesFor("""up{job="b"}""") == Seq(Map("__name__" -> "up", "job" -> "b")))
+    assert(e.registeredSeries == 2)
+    val meta = metaSsts(e)
+    e.write(upBatch(day + 1000, "a", "b"))
+    assert(metaSsts(e) == meta)
+    assert(e.registeredSeries == 2)
+  }
+
+  test("a new MetricEngine on the same root treats stored series as " +
+      "registered") {
+    val root = Files.createTempDirectory("graft-metric").toString
+    new MetricEngine(spark, root).write(upBatch(day, "a", "b"))
+    val e = new MetricEngine(spark, root)
+    assert(e.registeredSeries == 0) // loaded by the first write, not before
+    val meta = metaSsts(e)
+    e.write(upBatch(day + 1000, "b", "a"))
+    assert(metaSsts(e) == meta)
+    assert(e.registeredSeries == 2)
+    assert(e.data.scan().count() == 4)
+  }
+
+  test("one batch spanning two segments writes one SST per segment and " +
+      "every row reads back, local and distributed alike") {
+    import spark.implicits._
+    val seg = 12L * 3600 * 1000
+    val rows = Seq(Sample("up", Map("job" -> "a"), day + 1000, 1.0),
+      Sample("up", Map("job" -> "b"), day + seg - 1, 2.0),
+      Sample("up", Map("job" -> "a"), day + seg, 3.0),
+      Sample("up", Map("job" -> "b"), day + seg + 5000, 4.0))
+    def readBack(e: MetricEngine) =
+      e.data.scan().collect().map(r => (r.getAs[Long]("ts"), r.getAs[Double]("value")))
+        .toSeq.sorted
+    val want = rows.map(s => (s.timestamp, s.value)).sorted
+    val e = engine()
+    e.write(upBatch(day, "a", "b")) // register both series
+    val dataBefore = e.data.manifest.allSsts().map(_.id).toSet
+    assert(jobsOf(e.write(rows.toDF())) == 2)
+    val added = e.data.manifest.allSsts().filterNot(f => dataBefore(f.id))
+    assert(added.map(_.timeRange.start).sorted == Seq(day, day + seg))
+    assert(readBack(e) == (Seq((day, 1.0), (day, 1.0)) ++ want).sorted)
+    val d = engine()
+    d.write(spark.sparkContext.parallelize(rows, 2).toDF())
+    assert(d.data.manifest.allSsts().map(_.timeRange.start).sorted == Seq(day, day + seg))
+    assert(readBack(d) == want)
+    assert(d.seriesFor("up").size == 2)
+  }
+
+  test("an empty batch is a no-op: no Spark job, no SST") {
+    import spark.implicits._
+    val e = engine()
+    e.write(upBatch(day, "a"))
+    val ssts = Seq(e.metrics, e.tags, e.index, e.series, e.data, e.exemplars)
+      .map(_.manifest.allSsts().size)
+    val noSamples = Seq.empty[Sample].toDF()
+    val noExemplars = Seq.empty[(String, Map[String, String], Map[String, String], Long, Double)]
+      .toDF("name", "labels", "ex_labels", "timestamp", "value")
+    assert(jobsOf { e.write(noSamples); e.writeExemplars(noExemplars) } == 0)
+    assert(Seq(e.metrics, e.tags, e.index, e.series, e.data, e.exemplars)
+      .map(_.manifest.allSsts().size) == ssts)
+  }
 }
