@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.tools.Profile
+
 /** Driver-run benchmark: times every SparkEntry query at SPARK_GRAFT_SF_DIR,
   * prints one JSON line. Each query runs once untimed and once timed, so the
   * report measures steady-state latency — the reference's Criterion benches
@@ -9,7 +11,8 @@ import org.apache.spark.sql.SparkSession
   * run would time JVM/JIT/codegen-cache warmup (measured 5× the query cost
   * for the md5-heavy dedup path), not engine work. The warmup pass also
   * performs one-time builds (st1 storage load, e4 IVF index), so timed runs
-  * measure the query, not the load. */
+  * measure the query, not the load. The sampling protocol and the per-query
+  * layer split in BENCH_DETAIL.json come from [[graft.tools.Profile]]. */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -33,18 +36,6 @@ object Bench {
     // overlaps the first timed run; the median discards that outlier.
     // optional args: bench only the named queries (dev-side triage)
     val only = args.toSet
-
-    /** Warmup-then-3-samples median for one unit of work — the same
-      * protocol as the query loop, shared with the canaries. */
-    def medianOf3(work: () => Unit): Double = {
-      try work() catch { case _: Throwable => () }
-      val samples = (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        try work() catch { case _: Throwable => () }
-        (System.nanoTime() - t0) / 1e9
-      }
-      samples.sorted.apply(1)
-    }
 
     // Fixed canary workloads (see the normalization block below): sized
     // around half a second each so sample jitter is small against the
@@ -71,6 +62,11 @@ object Bench {
             .count().count(); ()
         }))
     }
+    // median seconds of one canary under the shared sampling protocol
+    // (-1 if it failed; the canary ratio skips non-positive times)
+    def canaryPass(keep: collection.Set[Int]): Seq[(String, Double)] =
+      canaryWork.map { case (n, w) =>
+        n -> Profile.sample(keep)(Profile.run(n)(w())._2).fold(-1.0)(_.medS) }
     // locale-pinned 2-decimal format: f"%.2f" renders "1,23" on
     // comma-decimal locales, which breaks the JSON consumers
     def fmt2(v: Double): String =
@@ -140,8 +136,7 @@ object Bench {
         SparkEntry.prewarm(spark, sf1Dir)
         val keep1 = spark.sparkContext.getPersistentRDDs.keySet
         val qmap = SparkEntry.queries
-        val laneCanaryBefore = canaryWork.map { case (n, w) =>
-          val t = medianOf3(w); System.gc(); n -> t }
+        val laneCanaryBefore = canaryPass(keep1)
         def measureEntry(name: String): (Double, Double, Double) =
           // a renamed/removed lane query records -1 like other lane
           // failures instead of aborting the whole bench run
@@ -150,7 +145,6 @@ object Bench {
               System.err.println(s"[bench] sf1 lane $name: unknown query")
               (-1.0, -1.0, -1.0)
             case Some(fn) =>
-              try fn(spark, sf1Dir).count() catch { case _: Throwable => () }
               // median of THREE timed samples (round 14): a single sample
               // let one contended multi-job run stand as the committed
               // scaling number (r13: e12_pagerank 17.7× under lane-time
@@ -160,25 +154,13 @@ object Bench {
               // fails ONLY at 10× is exactly the blow-up this lane exists
               // to catch, and a near-zero plan-setup time would read as
               // "scales great".
-              // one failed sample already decides the -1 entry — stop
-              // sampling (a multi-minute 10×-only OOM would otherwise
-              // run 3 times for no information gain)
-              val samples = scala.collection.mutable.ArrayBuffer.empty[Double]
-              var failed = false
-              while (samples.length < 3 && !failed) {
-                val t0 = System.nanoTime()
-                try { fn(spark, sf1Dir).count()
-                  samples += (System.nanoTime() - t0) / 1e9 }
-                catch { case e: Throwable =>
-                  System.err.println(s"[bench] sf1 lane $name FAILED: $e")
-                  failed = true }
-              }
-              spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-                if (!keep1.contains(id)) rdd.unpersist(blocking = true)
-              }
-              System.gc()
-              if (failed) (-1.0, -1.0, -1.0)
-              else { val s = samples.sorted; (s(0), s(1), s(2)) }
+              // one failed sample already decides the -1 entry, and
+              // sampling stops there
+              Profile.sample(keep1)(Profile.query(name)(fn(spark, sf1Dir)))
+                .fold {
+                  System.err.println(s"[bench] sf1 lane $name FAILED")
+                  (-1.0, -1.0, -1.0)
+                }(s => (s.minS, s.medS, s.maxS))
           }
         val lane = sf1Lane.map(name => name -> measureEntry(name))
         // Isolated rerun of contended entries (round 16, verdict task 6):
@@ -196,8 +178,7 @@ object Bench {
             System.err.println(s"[bench] sf1 lane $n spread ${fmt2(hi / lo)}× — isolated rerun")
             n -> measureEntry(n)
         }
-        val laneCanaryAfter = canaryWork.map { case (n, w) =>
-          val t = medianOf3(w); System.gc(); n -> t }
+        val laneCanaryAfter = canaryPass(keep1)
         val laneCanary = laneCanaryBefore.zip(laneCanaryAfter)
           .map { case ((n, b), (_, a)) => n -> ((b + a) / 2.0) }
         // the lane's 10× tables are no longer needed; drop its one-time
@@ -213,9 +194,7 @@ object Bench {
       sf1Results.map { case (k, (_, m, _)) => k -> m }
 
     // pre-suite canary pass — bracketed with the post-suite pass below
-    val canaryBefore = canaryWork.map { case (n, w) =>
-      val t = medianOf3(w); System.gc(); n -> t
-    }
+    val canaryBefore = canaryPass(keep)
     // Streaming run-to-completion entries (bounded file-stream → memory
     // sink) time Structured Streaming's micro-batch startup/teardown — a
     // fixed multi-second overhead independent of data volume — not engine
@@ -229,31 +208,22 @@ object Bench {
       .filter { case (name, _) =>
         if (only.isEmpty) !streamingOnly(name) else only(name) }
       .map { case (name, fn) =>
-      try fn(spark, sfDir).count()
-      catch { case _: Throwable => () }
-      val samples = (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        (System.nanoTime() - t0) / 1e9
-      }
       // Steady-state hygiene (r3 post-mortem): prefix-sum and connected-
       // components leave localCheckpoint blocks pinned until driver GC;
       // across 66 queries × 3 runs the block manager churns and the
       // late-alphabet queries time storage eviction instead of their plans
-      // (official r3: ttl1 6.85 s vs 0.33 s isolated). Drop every
-      // persistent RDD the query created, keep the one-time caches, and
-      // collect the driver-side garbage between queries — all untimed.
-      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!keep.contains(id)) rdd.unpersist(blocking = true)
-      }
-      System.gc()
-      name -> { val s = samples.sorted; (s(0), s(1), s(2)) }
+      // (official r3: ttl1 6.85 s vs 0.33 s isolated). The sampler drops
+      // every persistent RDD the query created, keeps the one-time caches,
+      // and collects the driver-side garbage between queries, all untimed.
+      // A failed query records -1 like a failed lane entry.
+      name -> Profile.sample(keep)(Profile.query(name)(fn(spark, sfDir)))
     }
-    val results: Seq[(String, Double)] =
-      resultsSpread.map { case (k, (_, m, _)) => k -> m } // median of 3
+    val results: Seq[(String, Double)] = // median of 3
+      resultsSpread.map { case (k, s) => k -> s.fold(-1.0)(_.medS) }
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
+    def sumTimes(ts: Seq[(String, Double)]): Double = ts.map(_._2).filter(_ >= 0).sum
+    val total = sumTimes(results)
 
     val baseTimes = results.toMap
     val sf1Scaling: Seq[(String, Double)] = sf1Median.flatMap {
@@ -275,9 +245,7 @@ object Bench {
     // `normalized_total` (and BENCH_DETAIL's `normalized`), not raw
     // seconds. Each canary is sized ≥ ~0.5 s so its own jitter stays
     // small relative to the host swings it is measuring.
-    val canaryAfter = canaryWork.map { case (n, w) =>
-      val t = medianOf3(w); System.gc(); n -> t
-    }
+    val canaryAfter = canaryPass(keep)
     val canaryTimes: Seq[(String, Double)] = canaryBefore.zip(canaryAfter)
       .map { case ((n, b), (_, a)) => n -> ((b + a) / 2.0) }
     val canaryRatio = canaryRatioOf(canaryTimes)
@@ -309,6 +277,21 @@ object Bench {
     // visible on the artifact instead of hiding behind its median
     def spreadJson(lo: Double, m: Double, hi: Double): String =
       s"""{"min":${fmt2(lo)},"med":${fmt2(m)},"max":${fmt2(hi)}}"""
+    // a suite query's spread plus the median sample's layer split: build
+    // (driver-side construction), Spark planning, execution, and its jobs,
+    // shuffle-write and spill bytes (-1 throughout for a failed query)
+    def suiteRowJson(s: Option[Profile.Spread]): String = s match {
+      case None => """{"min":-1,"med":-1,"max":-1,"build_ms":-1,""" +
+        """"plan_ms":-1,"exec_ms":-1,"jobs":-1,"shuffle_bytes":-1,""" +
+        """"spill_bytes":-1}"""
+      case Some(s) =>
+        val m = s.median
+        s"""{"min":${fmt2(s.minS)},"med":${fmt2(s.medS)},""" +
+          s""""max":${fmt2(s.maxS)},"build_ms":${fmt2(m.buildMs)},""" +
+          s""""plan_ms":${fmt2(m.planMs)},"exec_ms":${fmt2(m.execMs)},""" +
+          s""""jobs":${m.jobs},"shuffle_bytes":${m.shuffleWrite},""" +
+          s""""spill_bytes":${m.spill}}"""
+    }
     val sf1SpreadJson = sf1Results.map { case (k, (lo, m, hi)) =>
       "\"" + k + "\":" + spreadJson(lo, m, hi) }.mkString("{", ",", "}")
     val sf1RerunJson = sf1Rerun.map { case (k, (lo, m, hi)) =>
@@ -347,8 +330,8 @@ object Bench {
         s"""    "$k": ${v / canaryRatio}""" }.mkString(",\n")
       pretty ++= "\n  },\n"
       pretty ++= s"""  "queries_spread": {\n"""
-      pretty ++= resultsSpread.map { case (k, (lo, m, hi)) =>
-        s"""    "$k": ${spreadJson(lo, m, hi)}""" }.mkString(",\n")
+      pretty ++= resultsSpread.map { case (k, s) =>
+        s"""    "$k": ${suiteRowJson(s)}""" }.mkString(",\n")
       pretty ++= "\n  },\n"
       pretty ++= s"""  "sf1": {\n"""
       pretty ++= sf1Median.map { case (k, v) => s"""    "$k": $v""" }
@@ -389,7 +372,7 @@ object Bench {
       .groupBy { case (k, _) =>
         k.split('_').head.reverse.dropWhile(_.isDigit).reverse }
       .toSeq.sortBy(_._1)
-      .map { case (fam, qs) => fam -> qs.map(_._2).sum }
+      .map { case (fam, qs) => fam -> sumTimes(qs) }
     val famJson = famTotals.map { case (f, v) =>
       "\"family:" + f + "\":" + fmt3(v) }.mkString("{", ",", "}")
     println(

@@ -823,7 +823,7 @@ object SparkEntry {
     * reuses — the marker fingerprint decides) the bench lane's 10× corpus
     * for that source at [[scaledDirFor]]'s canonical location and returns
     * it; anything else passes through. ONE definition shared by Bench's
-    * lane and the ScaleProbe/IvfProbe triage tools, so a probe can never
+    * lane and the `Profile query` / IvfProbe triage tools, so a probe can never
     * silently measure a different corpus than the lane it triages. */
   def resolveScaledSpec(s: SparkSession, spec: String): String = {
     // scaled<N>x:<srcDir> — any copy count (the bench lane uses 10; the

@@ -728,37 +728,12 @@ object Dedup {
         (step, Seq(intermediate))
       }
     }
-    // Double-stepping (round 16): past the first `doubleStepAfter` rounds,
-    // TWO propagation rounds run between convergence checks — the rounds
-    // fuse into the check's one job (the mid frame is cache()d so the
-    // second round's two references compute it once), halving driver
-    // syncs/actions in exactly the regime the iterative path still owns
-    // (graphs above the union-find cap, 1M–100M+ edges; a long-diameter
-    // graph pays tens of rounds). Sound by monotonicity: labels only
-    // decrease, so sum(labels) after round k+2 equal to the last checked
-    // sum means NEITHER round changed anything — the same amortized
-    // argument the non-integral changed-count path already uses. Early
-    // rounds keep the per-round check (short-converging graphs measured
-    // slower under amortized checks: up to one dead full-shuffle round
-    // past convergence for no sync savings); the `iter + 2 <= maxIter`
-    // guard preserves exact did-not-converge-within-maxIter semantics.
-    val doubleStepAfter = 4
     var converged = false
     var prevWasCheckpoint = true // the init frame is localCheckpoint()ed
     var iter = 0
     while (!converged && iter < maxIter) {
-      val steps =
-        if (idIsIntegral && iter >= doubleStepAfter && iter + 2 <= maxIter) 2
-        else 1
-      var step = labels
-      var frees: Seq[DataFrame] = Nil
-      (1 to steps).foreach { s =>
-        val cur = if (s == 1) step else { val c = step.cache(); frees :+= c; c }
-        val (nxt, intra) = propagate(cur)
-        step = nxt
-        frees ++= intra
-      }
-      val checkpointRound = (iter + steps) % checkpointEvery < steps
+      val (step, intra) = propagate(labels)
+      val checkpointRound = (iter + 1) % checkpointEvery == 0
       val next = if (checkpointRound) step.localCheckpoint() else step.cache()
       if (idIsIntegral) {
         // labelSum is the round's one action: it materializes the cache (or
@@ -767,7 +742,7 @@ object Dedup {
         val nextSum = labelSum(next)
         converged = nextSum.compareTo(prevSum) == 0
         prevSum = nextSum
-      } else if (checkpointRound || iter + steps >= maxIter) {
+      } else if (checkpointRound || iter + 1 >= maxIter) {
         // Amortized pointwise check (the join is too costly per round);
         // between checks no action runs, so the intermediate rounds fuse
         // into this one job. Sound by monotonicity: labels only decrease,
@@ -781,13 +756,12 @@ object Dedup {
       // unpersisting them would make any evicted downstream block
       // unrecoverable; the context cleaner frees them on GC instead.
       if (!prevWasCheckpoint) labels.unpersist()
-      // intra-round caches (compress-round propagate frames, double-step
-      // mid frames) served their double read; evicted blocks recompute
-      // through lineage if next's cache later needs them
-      frees.foreach(_.unpersist())
+      // compress-round propagate frames served their double read; evicted
+      // blocks recompute through lineage if next's cache later needs them
+      intra.foreach(_.unpersist())
       prevWasCheckpoint = checkpointRound
       labels = next
-      iter += steps
+      iter += 1
     }
     edges.unpersist()
     // Returning non-converged labels would split components and mark false

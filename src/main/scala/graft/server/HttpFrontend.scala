@@ -327,7 +327,7 @@ final class HttpFrontend(
     else {
       // full-request decode: samples for ingest AND the request's metric
       // metadata records for the live metadata cache behind
-      // /api/v1/metadata (CodecBench: full parse ≈ samples-only parse;
+      // /api/v1/metadata (SCALE.md codec record: full ≈ samples-only parse;
       // the extras are a few hundred small records per request)
       val req =
         try graft.streaming.RemoteWrite.decodeRequest(body)

@@ -11,8 +11,8 @@ import graft.server.HttpFrontend
 import graft.storage.{CompactionConfig, CompactionScheduler, Compactor}
 import graft.streaming.RemoteWrite
 
-/** Remote-write HTTP soak — closes the loop between `CodecBench`'s parse
-  * number and `SinkProbe`'s commit number: the reference's CAPTURED
+/** Remote-write HTTP soak — closes the loop between decode throughput
+  * (SCALE.md's codec record) and `SinkProbe`'s commit number: the reference's CAPTURED
   * Prometheus workload is replayed against `POST /api/v1/write` over a
   * real socket at the soak cadence (one payload / 500 ms, the reference
   * server's own write tick) for `seconds`, with the 1 s background

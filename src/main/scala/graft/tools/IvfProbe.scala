@@ -14,13 +14,13 @@ import org.apache.spark.sql.functions._
   *
   * Usage: runMain graft.tools.IvfProbe <dir>[,<dir>...] — a spec
   * `scaled10x:<srcDir>` synthesizes (or reuses — the marker fingerprint
-  * decides) the bench lane's 10× corpus, like ScaleProbe's.
+  * decides) the bench lane's 10× corpus, like `Profile query`'s.
   */
 object IvfProbe {
   def main(args: Array[String]): Unit = {
     val spark = graft.GraftSession.create(32)
     for (spec <- args(0).split(',').toSeq) try {
-      // resolve through the shared definition (see ScaleProbe) and guard
+      // resolve through the shared definition (as `Profile query` does) and guard
       // each spec: one bad dir must not abort the remaining specs or
       // skip spark.stop()
       val dir = graft.SparkEntry.resolveScaledSpec(spark, spec)

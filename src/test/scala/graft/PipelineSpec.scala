@@ -1166,12 +1166,7 @@ class PipelineSpec extends AnyFunSuite {
   test("small-graph union-find clustering == iterative clustering") {
     // the single-task arm must produce the exact (id -> min reachable id)
     // assignment of the distributed rounds on random graphs and chains
-    val rnd = new scala.util.Random(7)
-    for (trial <- 1 to 4) {
-      val n = 40 + trial * 25
-      val pairs = (1 to n).map(_ =>
-        (rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))
-        .filter(p => p._1 != p._2).toDF("id_a", "id_b")
+    def bothWays(pairs: org.apache.spark.sql.DataFrame, clue: String): Unit = {
       val local = Dedup.duplicateClusters(pairs)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       spark.conf.set("graft.pipeline.localCcMaxEdges", "0")
@@ -1179,7 +1174,24 @@ class PipelineSpec extends AnyFunSuite {
         try Dedup.duplicateClusters(pairs)
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
         finally spark.conf.unset("graft.pipeline.localCcMaxEdges")
-      assert(local == iterative, s"trial $trial")
+      assert(local == iterative, clue)
+    }
+    val rnd = new scala.util.Random(7)
+    for (trial <- 1 to 4) {
+      val n = 40 + trial * 25
+      bothWays((1 to n).map(_ =>
+        (rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))
+        .filter(p => p._1 != p._2).toDF("id_a", "id_b"), s"trial $trial")
+    }
+    // chains of 15-29 nodes under shuffled ids (plus a few shortcuts inside
+    // each chain) take several checkpoint intervals (4 rounds each) of
+    // propagation; diameters stay under the 50-round budget
+    val crnd = new scala.util.Random(11)
+    for (trial <- 1 to 3) {
+      val chains = crnd.shuffle((1L to 200L).toList).grouped(8 + trial * 7).toSeq
+      bothWays(chains.flatMap(c => c.zip(c.tail) ++
+          (1 to 2).map(_ => (c(crnd.nextInt(c.size)), c(crnd.nextInt(c.size)))))
+        .filter(p => p._1 != p._2).toDF("id_a", "id_b"), s"chain trial $trial")
     }
     // a chain long past any iteration budget converges exactly in one pass
     val chain = (1L until 300L).map(i => (i, i + 1)).toDF("id_a", "id_b")

@@ -137,6 +137,18 @@ class PlanSpec extends AnyFunSuite {
       .contains("BroadcastHashJoin"), "scalar() should broadcast the steps frame")
   }
 
+  test("nh5 cross-series histogram aggregation plans a bounded exchange " +
+      "count") {
+    // the executed plan carries 8 Exchange mentions (6 shuffles, 2
+    // broadcasts); the plan this replaced unrolled into 410 (formatted
+    // dumps in plans/r15/nh5_native_hist_agg_{before,after}.txt), so any
+    // change here must be a deliberate, re-measured one
+    // (a built-in fixture: the query reads no data dir)
+    val df = SparkEntry.queries("nh5_native_hist_agg")(spark, "")
+    val plan = df.queryExecution.executedPlan.toString
+    assert("Exchange".r.findAllIn(plan).size == 8, plan.take(4000))
+  }
+
   test("rollup-routed plan: metric filter pushed into the rollup scan, " +
       "partials pruned to the agg's needs, tsid set broadcast") {
     import graft.metric._

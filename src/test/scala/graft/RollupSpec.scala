@@ -404,6 +404,30 @@ class RollupSpec extends AnyFunSuite {
     assert(r.refresh().segmentsRolled == 1)
   }
 
+  test("a cold backfill over several dirty segments answers exactly like " +
+      "a rollup refreshed after every segment write") {
+    val segs = (0 until 5).map(seg => (0 until 20).map(j =>
+      (s"h${j % 3}", seg * 2 * day + j * 37L * 60000L, (seg * 20 + j).toDouble)))
+    val cold = freshEngine()
+    segs.foreach(write(cold, _))
+    val rCold = new Rollup(cold, gridMs = hour)
+    assert(rCold.refresh().segmentsRolled == 5)
+    val incr = freshEngine()
+    val rIncr = new Rollup(incr, gridMs = hour)
+    segs.foreach { rows =>
+      write(incr, rows)
+      assert(rIncr.refresh().segmentsRolled == 1)
+    }
+    for (rate <- Seq(false, true)) {
+      val q = MetricQuery("cpu", stepMs = Some(hour), agg = MetricAgg.Sum,
+        groupByTag = Some("host"), rate = rate)
+      val coldRows = rCold.query(q).collect().map(_.toSeq).toSet
+      assert(coldRows.nonEmpty, s"rate=$rate")
+      assert(coldRows == rIncr.query(q).collect().map(_.toSeq).toSet,
+        s"rate=$rate")
+    }
+  }
+
   test("watermark survives a reopen: a new Rollup instance over the same " +
       "roots refreshes nothing until new data arrives") {
     val eng = freshEngine()
